@@ -324,8 +324,9 @@ class FeatureStore:
     ) -> dict[object, list[dict[str, str]]]:
         """[EXT] Batch point lookup (public SageMaker batch_get_record
         analog): latest record for each requested key, absent keys
-        omitted. One job for N keys — an IN-filter over the latest view —
-        instead of N point queries."""
+        omitted. One lookup for N keys — an IN-filter over the serving
+        view, pruned to the keys' buckets — instead of N point queries;
+        it still runs several Spark jobs (sidecar read, listing, scan)."""
         group = self._groups[name]
         rows = (
             self._serving_view(name, record_identifier_values)
@@ -378,8 +379,8 @@ class FeatureStore:
     ) -> None:
         """Incremental online refresh: MERGE the batch returned by
         `ingest` into the bucketed snapshot, touching only the bucket
-        partitions the batch's keys hash into — O(batch), not
-        O(snapshot) (core/online.py). Equivalent to
+        partitions the batch's keys hash into — O(batch + dirty
+        buckets) (core/online.py). Equivalent to
         `materialize_online` when applied to every ingested batch.
         The bucket count is taken from the snapshot sidecar; passing an
         explicit conflicting value raises (core/online.py)."""

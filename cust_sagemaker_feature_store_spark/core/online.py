@@ -6,19 +6,21 @@ this module implements the MERGE-keyed-upsert *shape* behind the same
 interface (the documented gate, as with Avro): the online snapshot is
 partitioned by a stable key-hash bucket, and an upsert
 
-1. reduces the incoming batch to its per-key latest rows,
-2. finds the buckets those keys hash into (the DIRTY buckets —
-   collected driver-side; it is at most ``n_buckets`` small ints),
-3. reads ONLY the dirty bucket partitions of the stored snapshot
+1. tags the incoming batch with its bucket column, persists it, and
+   runs ONE stats job over all its rows (``max(tie_breaker)`` per
+   bucket) for emptiness, the DIRTY buckets and the high-water mark,
+2. reads ONLY the dirty bucket partitions of the stored snapshot
    (partition pruning on the bucket directory column),
-4. merges latest-wins per key, and
-5. rewrites ONLY the dirty partitions via dynamic partition overwrite.
+3. merges latest-wins per key, and
+4. rewrites ONLY the dirty partitions via dynamic partition overwrite.
 
-Work per refresh is O(batch + dirty-bucket rows), never O(snapshot) —
-the full-snapshot recompute + write-then-swap it replaces re-read and
-re-wrote the entire store per micro-batch (round-1 scale-killer,
-VERDICT r1 perf §). With Delta/Iceberg available, steps 2-5 collapse
-into ``MERGE INTO ... WHEN MATCHED``; semantics are identical.
+Work per refresh is O(batch + dirty-bucket rows) — the full-snapshot
+recompute + write-then-swap it replaces re-read and re-wrote the entire
+store per micro-batch (round-1 scale-killer, VERDICT r1 perf §). A batch
+with more distinct keys than buckets usually dirties every bucket, and
+then the dirty rows are the snapshot. With Delta/Iceberg available,
+steps 1-4 collapse into ``MERGE INTO ... WHEN MATCHED``; semantics are
+identical.
 
 The snapshot directory carries a ``_snapshot_meta.json`` sidecar (an
 underscore-prefixed file, so parquet readers skip it — the _SUCCESS
@@ -29,13 +31,21 @@ partitions and silently miss keys (round-2 advice, online.py:105) —
 so both paths resolve the count FROM the sidecar and refuse an
 explicit conflicting override. The sequence high-water mark lets the
 serving path detect a stale snapshot and fall back to the derived
-latest view (round-2 advice, feature_store.py:221).
+latest view (round-2 advice, feature_store.py:221). It is the max over
+EVERY incoming row, not over the per-key winners: a row that loses the
+latest-wins race has still been merged.
 
-The merged dirty slice takes a hop through a scratch directory before
-the dynamic overwrite: Spark (correctly) refuses to overwrite a path
-that is also a source of the running plan. That double-write touches
-dirty buckets only, so the amplification is bounded by the batch's key
-spread, not the snapshot.
+The default is 16 buckets: above Spark's 32-subdirectory
+``parallelPartitionDiscovery.threshold`` every snapshot read starts a
+distributed listing job, each bucket file costs the writer a fixed
+open/close, and on batches that dirty every bucket more buckets save
+no rewrite. Existing snapshots keep the count in their sidecar.
+
+Spark (correctly) refuses to dynamic-overwrite a path that is also a
+source of the running plan, so the merged dirty slice is pinned with an
+EAGER ``localCheckpoint`` and written from the pinned blocks (as in
+functions/ids.py, a lost block fails loudly instead of recomputing from
+a source the overwrite has already replaced).
 
 Tombstones must be RETAINED in the snapshot (not filtered at write):
 a deleted key's tombstone row is what outranks late-arriving older
@@ -52,13 +62,13 @@ from pyspark.sql import functions as F
 from ..operators.latest import latest_snapshot
 
 BUCKET_COL = "bucket"
-DEFAULT_N_BUCKETS = 64
+DEFAULT_N_BUCKETS = 16
 META_FILE = "_snapshot_meta.json"
 
 
-def bucket_expr(keys: list[str], n_buckets: int) -> Column:
+def bucket_expr(keys: list[str | Column], n_buckets: int) -> Column:
     """Stable key->bucket assignment (xxhash64, engine-deterministic)."""
-    return F.pmod(F.xxhash64(*[F.col(k) for k in keys]), F.lit(n_buckets)).cast("int")
+    return F.pmod(F.xxhash64(*keys), F.lit(n_buckets)).cast("int")
 
 
 # -- sidecar metadata (Hadoop FS, so the same code reaches HDFS/S3) -------
@@ -143,51 +153,39 @@ def upsert_bucketed_snapshot(
     exists = snapshot_exists(spark, snapshot_dir)
     n = _resolve_n_buckets(meta, n_buckets, snapshot_dir)
 
-    inc_latest = latest_snapshot(
-        incoming, key_list, event_time_col, tie_breaker
-    ).withColumn(BUCKET_COL, bucket_expr(key_list, n))
-
-    # the batch's latest rows feed several actions (emptiness probe,
-    # high-water mark, dirty-bucket discovery, the merge write); persist
-    # so the batch lineage — which may reach back through the ingest
-    # join — runs once
-    inc_latest.persist()
+    # the batch feeds the stats job and the merge; persist so its
+    # lineage — which may reach back through the ingest join — runs once
+    batch = incoming.withColumn(BUCKET_COL, bucket_expr(key_list, n)).persist()
     try:
-        # empty micro-batch: nothing to merge, and an empty partitioned
+        # one job answers emptiness, dirty buckets and high-water mark;
+        # an empty batch must return early, as an empty partitioned
         # write would fail schema inference on read-back (round-2 advice)
-        if not inc_latest.take(1):
+        stats = batch.groupBy(BUCKET_COL).agg(F.max(tie_breaker)).collect()
+        if not stats:
             return
-        batch_high = inc_latest.agg(F.max(tie_breaker)).collect()[0][0]
-        seq_high = max(int(batch_high), int(meta["seq_high"])) if meta else int(batch_high)
+        batch_high = max(int(r[1]) for r in stats)
+        seq_high = max(batch_high, int(meta["seq_high"])) if meta else batch_high
 
-        if not exists:
-            inc_latest.write.partitionBy(BUCKET_COL).mode("overwrite").parquet(
-                snapshot_dir, compression="snappy"
+        if exists:
+            # the batch's schema is the snapshot's: passing it skips
+            # the footer-reading schema-inference job
+            stored_dirty = (
+                spark.read.schema(batch.schema).parquet(snapshot_dir)
+                .filter(F.col(BUCKET_COL).isin([r[0] for r in stats]))
             )
-            write_snapshot_meta(spark, snapshot_dir, n, seq_high)
-            return
-
-        stored = spark.read.parquet(snapshot_dir)
-        dirty = [r[0] for r in inc_latest.select(BUCKET_COL).distinct().collect()]
-        stored_dirty = stored.filter(F.col(BUCKET_COL).isin(dirty))
-        merged = latest_snapshot(
-            stored_dirty.unionByName(inc_latest), key_list, event_time_col, tie_breaker
-        )
-
-        scratch = snapshot_dir + "__merge_scratch"
-        merged.write.partitionBy(BUCKET_COL).mode("overwrite").parquet(
-            scratch, compression="snappy"
-        )
-        (
-            spark.read.parquet(scratch)
-            .write.option("partitionOverwriteMode", "dynamic")
-            .partitionBy(BUCKET_COL)
-            .mode("overwrite")
-            .parquet(snapshot_dir, compression="snappy")
+            merged = latest_snapshot(
+                stored_dirty.unionByName(batch), key_list, event_time_col, tie_breaker
+            ).localCheckpoint(eager=True)
+            writer = merged.write.option("partitionOverwriteMode", "dynamic")
+        else:
+            merged = latest_snapshot(batch, key_list, event_time_col, tie_breaker)
+            writer = merged.write
+        writer.partitionBy(BUCKET_COL).mode("overwrite").parquet(
+            snapshot_dir, compression="snappy"
         )
         write_snapshot_meta(spark, snapshot_dir, n, seq_high)
     finally:
-        inc_latest.unpersist()
+        batch.unpersist()
 
 
 def read_snapshot(spark: SparkSession, snapshot_dir: str) -> DataFrame:
@@ -213,8 +211,9 @@ def read_snapshot_bucket(
     if meta is None and n_buckets is None:
         return snap
     n = _resolve_n_buckets(meta, n_buckets, snapshot_dir)
-    probe = spark.createDataFrame(
-        [(v,) for v in key_values], f"{key_list[0]} {dict(snap.dtypes)[key_list[0]]}"
-    ).select(bucket_expr(key_list, n).alias("b"))
-    buckets = [r["b"] for r in probe.distinct().collect()]
+    # hash literals cast to the stored key type (xxhash64 of an int and
+    # of a long differ); Catalyst folds each to a constant, so the
+    # pruning needs no probe job
+    dtype = dict(snap.dtypes)[key_list[0]]
+    buckets = [bucket_expr([F.lit(v).cast(dtype)], n) for v in key_values]
     return snap.filter(F.col(BUCKET_COL).isin(buckets))

@@ -11,8 +11,8 @@ readStream with a foreachBatch sink doing both writes per micro-batch:
   ingest are indistinguishable to readers);
 - online: keyed MERGE into a bucket-partitioned snapshot
   (core/online.py): only the bucket partitions the batch's keys hash
-  into are read and rewritten — O(batch) per micro-batch, never
-  O(snapshot). With Delta/Iceberg present this is literally MERGE INTO
+  into are read and rewritten — O(batch + dirty buckets) per
+  micro-batch. With Delta/Iceberg present this is literally MERGE INTO
   keyed on the record identifier; the semantics (A1 latest-wins with
   ingest_seq tie-break) are identical and tested equal to the batch
   window form.
@@ -123,7 +123,7 @@ class StreamingIngest:
     def _upsert_snapshot(self, normalized: DataFrame) -> None:
         """Keyed MERGE into the bucketed snapshot: reads and rewrites
         only the bucket partitions the batch's keys hash into —
-        O(batch + dirty buckets) per micro-batch, never O(snapshot)
+        O(batch + dirty buckets) per micro-batch
         (core/online.py; replaces the r1 full recompute + swap)."""
         upsert_bucketed_snapshot(
             self.spark,

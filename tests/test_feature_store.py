@@ -341,6 +341,91 @@ def test_empty_upsert_batch_is_a_noop(store):
     assert sorted(map(tuple, store.online_store(GROUP.name).collect())) == before
 
 
+def test_high_water_mark_counts_rows_that_lose_latest_wins(store, monkeypatch):
+    # the batch's highest ingest_seq row is OLDER in event time than an
+    # earlier row of the same key, so it loses the latest-wins race; the
+    # snapshot has still merged it, and must not look stale afterwards
+    store.materialize_online(GROUP.name)
+    batch = store.spark.createDataFrame(
+        [
+            (1, "2023-06-01T00:00:00Z", 60.0, 0.6),  # key 1's winner
+            (1, "2023-01-01T00:00:00Z", 10.0, 0.1),  # last row, loses
+        ],
+        SCHEMA4,
+    ).coalesce(1)
+    out = store.ingest(GROUP.name, batch)
+    seqs = {r["latest_purchase_value"]: r["ingest_seq"] for r in out.collect()}
+    assert seqs[10.0] == max(seqs.values())
+    store.upsert_online(GROUP.name, out)
+    assert store._snapshot_is_fresh(GROUP.name)
+
+    def no_fallback(name):
+        raise AssertionError("lookup fell back to latest_view")
+
+    monkeypatch.setattr(store, "latest_view", no_fallback)
+    d = {f["FeatureName"]: f["ValueAsString"] for f in store.get_record(GROUP.name, 1)}
+    assert d["latest_purchase_value"] == "60.0"
+
+
+def test_upsert_keeps_an_older_64_bucket_layout(store, spark):
+    # a snapshot built under the former 64-bucket default must keep
+    # being merged and served with 64 buckets: the sidecar wins over
+    # the new default
+    import os as _os
+
+    from cust_sagemaker_feature_store_spark.core.online import (
+        DEFAULT_N_BUCKETS,
+        read_snapshot_meta,
+    )
+
+    assert DEFAULT_N_BUCKETS != 64
+    store.materialize_online(GROUP.name, n_buckets=64)
+    batch = spark.createDataFrame(
+        [(k, "2023-03-01T00:00:00Z", 100.0 + k, 0.5) for k in (1, 3, 9, 70, 133)],
+        SCHEMA4,
+    )
+    store.upsert_online(GROUP.name, store.ingest(GROUP.name, batch))
+    online = store.online_path(GROUP.name)
+    assert read_snapshot_meta(spark, online)["n_buckets"] == 64
+    assert store._snapshot_is_fresh(GROUP.name)
+    got = store.batch_get_record(GROUP.name, [1, 2, 3, 9, 70, 133, 999])
+    vals = {
+        k: {f["FeatureName"]: f["ValueAsString"] for f in rec}["latest_purchase_value"]
+        for k, rec in got.items()
+    }
+    assert vals == {1: "101.0", 2: "31.0", 3: "103.0", 9: "109.0", 70: "170.0", 133: "233.0"}
+    incremental = sorted(map(tuple, store.online_store(GROUP.name).collect()))
+    store.materialize_online(GROUP.name, n_buckets=64)
+    assert incremental == sorted(map(tuple, store.online_store(GROUP.name).collect()))
+    # the merge goes straight into the snapshot: no scratch sibling
+    assert not _os.path.exists(online + "__merge_scratch")
+
+
+# measured with the suite's session (local[8], 8 shuffle partitions):
+# 4 for the stats collect, which also fills the persisted batch from
+# the ingest lineage; 2 for the pinned merge; 1 for the write. A
+# scratch hop or an extra collect pushes it over.
+UPSERT_JOB_BUDGET = 7
+
+
+def test_upsert_online_job_budget(store, spark):
+    store.materialize_online(GROUP.name)
+    batch = spark.createDataFrame(
+        [(k, "2023-03-01T00:00:00Z", float(k), 0.5) for k in range(1, 40)], SCHEMA4
+    )
+    out = store.ingest(GROUP.name, batch)
+    sc = spark.sparkContext
+    sc.setJobGroup("upsert_job_budget", "upsert_online job budget")
+    try:
+        store.upsert_online(GROUP.name, out)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setJobDescription(None)
+    jobs = sc.statusTracker().getJobIdsForGroup("upsert_job_budget")
+    assert 0 < len(jobs) <= UPSERT_JOB_BUDGET, len(jobs)
+    assert store.get_record(GROUP.name, 39) is not None
+
+
 def test_loose_timestamp_roundtrip(spark):
     # F1/F3: '2022-01-02 7:43:18' (unpadded hour, reference:
     # test_task_data.csv:2) -> ISO-8601-Z

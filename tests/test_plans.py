@@ -669,6 +669,29 @@ def test_point_lookup_prunes_bucket_partitions(spark, tmp_path):
     rec = {f["FeatureName"]: f["ValueAsString"] for f in fs.get_record("LookupPlan", 7)}
     assert rec["v"] == "7.0"
 
+    # an int key column hashes differently from a long one: the pruned
+    # buckets come from literals cast to the stored key type
+    from cust_sagemaker_feature_store_spark.core.online import (
+        upsert_bucketed_snapshot,
+    )
+
+    int_dir = str(tmp_path / "int_snapshot")
+    upsert_bucketed_snapshot(
+        spark,
+        int_dir,
+        spark.createDataFrame([(i, i % 5, i) for i in range(40)], "k int, t int, seq long"),
+        "k", "t", "seq", n_buckets=16,
+    )
+    full = spark.read.parquet(int_dir)
+    assert dict(full.dtypes)["k"] == "int"
+    wanted = [3, 7, 29, 404]
+    pruned = read_snapshot_bucket(spark, int_dir, "k", wanted)
+    pf3 = partition_filters(pruned)
+    assert pf3 and "bucket" in pf3[0].lower()
+    got = sorted(map(tuple, pruned.filter(F.col("k").isin(wanted)).collect()))
+    assert got == sorted(map(tuple, full.filter(F.col("k").isin(wanted)).collect()))
+    assert [r[0] for r in got] == [3, 7, 29]
+
 
 # -- eager-finisher audit hooks (r14 verdict items #1 and #2) ------------
 
