@@ -48,6 +48,36 @@ EVENT_DATE_COL = "event_date"  # partition column
 DELETED_COL = "is_deleted"  # tombstone marker (public SageMaker offline-store column)
 
 
+def normalize_batch(
+    group: FeatureGroup, df: DataFrame, loose_timestamp: bool = False
+) -> DataFrame:
+    """Validate and cast a batch to the group's features, add the
+    ``is_deleted`` flag (absent or null means a live record), and
+    normalize the event time to the ISO-8601-Z string plus its typed
+    ``event_ts`` twin and the ``event_date`` partition column. Shared by
+    batch and streaming ingest so both store the same rows."""
+    # validate the feature columns (the tombstone marker is internal,
+    # not part of the declared schema), then project features + flag
+    # from the SAME frame so rows stay aligned
+    group.validate_frame(df.drop(DELETED_COL))
+    flag = (
+        F.coalesce(F.col(DELETED_COL).cast("boolean"), F.lit(False))
+        if DELETED_COL in df.columns
+        else F.lit(False)
+    ).alias(DELETED_COL)
+    df = df.select(
+        *[df[f.name].cast(f.spark_type).alias(f.name) for f in group.features],
+        flag,
+    )
+    tcol = group.event_time_feature
+    ts = parse_loose_timestamp(tcol) if loose_timestamp else parse_iso_z(tcol)
+    return (
+        df.withColumn(EVENT_TS_COL, ts)
+        .withColumn(tcol, format_iso_z(EVENT_TS_COL))
+        .withColumn(EVENT_DATE_COL, F.to_date(F.col(EVENT_TS_COL)))
+    )
+
+
 class FeatureStore:
     """Catalog of feature groups plus their offline materializations."""
 
@@ -117,31 +147,7 @@ class FeatureStore:
         Later-write-wins ties (including delete tombstones) therefore
         resolve by ingest order, never by partition layout.
         """
-        group = self._groups[name]
-        # validate the feature columns (tombstone marker is internal,
-        # not part of the declared schema), then project features + flag
-        # from the SAME frame so rows stay aligned
-        group.validate_frame(df.drop(DELETED_COL))
-        flag = (
-            F.col(DELETED_COL).cast("boolean")
-            if DELETED_COL in df.columns
-            else F.lit(False)
-        ).alias(DELETED_COL)
-        df = df.select(
-            *[df[f.name].cast(f.spark_type).alias(f.name) for f in group.features],
-            flag,
-        )
-        tcol = group.event_time_feature
-        ts = (
-            parse_loose_timestamp(tcol)
-            if loose_timestamp
-            else parse_iso_z(tcol)
-        )
-        normalized = (
-            df.withColumn(EVENT_TS_COL, ts)
-            .withColumn(tcol, format_iso_z(EVENT_TS_COL))
-            .withColumn(EVENT_DATE_COL, F.to_date(F.col(EVENT_TS_COL)))
-        )
+        normalized = normalize_batch(self._groups[name], df, loose_timestamp)
         # persist BEFORE tagging: the dense-id counts job, the offline
         # write, and any later action on the returned frame (e.g.
         # upsert_online) must all see ONE materialization — a

@@ -16,8 +16,9 @@ provably offset past:
    ``monotonically_increasing_id`` (its documented layout: partition id
    above bit 33, row-in-partition below);
 2. exact per-partition offsets from a count-by-partition job (narrow,
-   column-pruned — it reads no data columns; the tiny count table
-   broadcast-joins back on partition id).
+   column-pruned — it reads no data columns), looked up as a literal
+   ``partition id -> offset`` map, so the returned frame has no join
+   and its actions run no more jobs than the input's.
 
 Two passes over the batch, no shuffle of data rows, dense regardless of
 partition count or skew. Correctness requires the input's partitioning
@@ -65,15 +66,10 @@ def with_dense_row_ids(df: DataFrame, out_col: str) -> tuple[DataFrame, int]:
     counts = sorted(
         tagged.groupBy("__pid").count().collect(), key=lambda r: r["__pid"]
     )
-    offsets, total = [], 0
+    pairs, total = [], 0
     for r in counts:
-        offsets.append((r["__pid"], total))
+        pairs += [F.lit(r["__pid"]), F.lit(total).cast("long")]
         total += r["count"]
-    spark = df.sparkSession
-    odf = spark.createDataFrame(offsets or [(0, 0)], "__pid int, __off long")
-    out = (
-        tagged.join(F.broadcast(odf), "__pid", "left")
-        .withColumn(out_col, F.coalesce(F.col("__off"), F.lit(0)) + F.col("__row"))
-        .drop("__pid", "__row", "__off")
-    )
+    off = F.create_map(*pairs)[F.col("__pid")] if pairs else F.lit(0)
+    out = tagged.withColumn(out_col, off + F.col("__row")).drop("__pid", "__row")
     return out, total

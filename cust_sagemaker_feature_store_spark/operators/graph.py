@@ -373,59 +373,39 @@ def kcore(
     return e.select(F.col("__s").alias(src), F.col("__d").alias(dst))
 
 
-def bfs_depths(
-    edges: DataFrame,
-    sources: DataFrame,
-    max_depth: int = 6,
-    src: str = "src",
-    dst: str = "dst",
+def _bfs_levels(
+    edges: DataFrame, frontier: DataFrame, keys: list[str],
+    max_depth: int, src: str, dst: str,
 ) -> DataFrame:
-    """Bounded-depth breadth-first frontier expansion: the hop distance
-    of every node reachable from `sources` within `max_depth` hops —
-    the reachability primitive the dedup-cluster audit and ER graphs
-    need (how far does a duplicate relation propagate?).
+    """Level-synchronous BFS from `frontier` (`*keys, node`): per level,
+    one frontier-edge join, a distinct, and an anti join against the
+    visited set on (`*keys`, node), so sources that share a key value
+    share one visited set. Returns (`*keys`, node, depth), the minimum
+    hop count; the frontier size is the per-level early stop.
 
-    Classic distributed BFS: per level, one join of the (pinned)
-    frontier against the edge list, a distinct, and an anti join
-    against the visited set to keep only NEW nodes. Per-level driver
-    state is one scalar (the frontier size — both the early-stop test
-    and the natural telemetry). Both carried frames are pinned eagerly
-    every level (localCheckpoint): the visited set and frontier are
-    re-read by every subsequent level's job, and cross-job exchange
-    reuse does not exist — unpinned, level d re-expands levels 1..d-1
-    (the deep-PageRank lesson, measured in SCALING.md). The visited
-    frame is bounded by the node count, the frontier by the widest
-    level; rounds are bounded by `max_depth`, so lineage never grows
-    past one level's plan.
-
-    `sources` is a 1-column frame of start nodes (depth 0; nodes
-    absent from the edge list are fine — they just never expand).
-    Returns (node, depth) with the MINIMUM hop count per reached node,
-    deterministic by construction (level-synchronous expansion).
-
-    Measured alternative, rejected (r7): keeping the visited set as a
-    LAZY UNION of the already-pinned level frontiers avoids the
-    per-level visited re-pin (O(V) total checkpoint writes instead of
-    O(V·depth)) — but the anti-join's right side then stops being one
-    compact broadcastable frame and the fixture ran ~30% SLOWER
-    (10.4s vs 7.9s at sf0.1, min-of-2 idle). The visited re-pin is
-    V rows against the per-level edge join's E — the write saving
-    never dominates, so the single pinned frame wins at every scale.
+    The edge list is pinned once, so a derived edge frame (the
+    co-occurrence window + self-join + distinct) is not recomputed per
+    level. Frontier and visited are pinned every level because the next
+    level's job re-reads both and cross-job exchange reuse does not
+    exist: unpinned, level d re-expands levels 1..d-1 (SCALING.md).
+    Rejected (r7): visited as a LAZY UNION of the pinned frontiers saves
+    the re-pin, but the anti join's right side stops being one compact
+    broadcastable frame; it ran ~30% slower (10.4s vs 7.9s at sf0.1).
     """
     if max_depth < 0:
         raise ValueError("max_depth must be >= 0")
     e = edges.select(F.col(src).alias("__s"), F.col(dst).alias("__d"))
-    frontier = sources.select(
-        F.col(sources.columns[0]).alias("node")
-    ).distinct().localCheckpoint(eager=True)
+    e = e.localCheckpoint(eager=True)
+    visit_cols = [*keys, "node"]
+    frontier = frontier.localCheckpoint(eager=True)
     known = frontier.withColumn("depth", F.lit(0).cast("long"))
     known = known.localCheckpoint(eager=True)
     for d in range(1, max_depth + 1):
         nxt = (
             frontier.join(e, frontier["node"] == e["__s"])
-            .select(F.col("__d").alias("node"))
+            .select(*keys, F.col("__d").alias("node"))
             .distinct()
-            .join(known.select("node"), "node", "left_anti")
+            .join(known.select(*visit_cols), visit_cols, "left_anti")
         ).localCheckpoint(eager=True)
         if nxt.count() == 0:
             break
@@ -434,6 +414,22 @@ def bfs_depths(
         ).localCheckpoint(eager=True)
         frontier = nxt
     return known
+
+
+def bfs_depths(
+    edges: DataFrame,
+    sources: DataFrame,
+    max_depth: int = 6,
+    src: str = "src",
+    dst: str = "dst",
+) -> DataFrame:
+    """Bounded-depth BFS: the hop distance of every node reachable
+    from `sources` (a 1-column frame, depth 0; nodes absent from the
+    edge list never expand) within `max_depth` hops. All sources share
+    one visited set. Returns (node, depth), the MINIMUM hop count per
+    reached node (see `_bfs_levels`)."""
+    frontier = sources.select(F.col(sources.columns[0]).alias("node")).distinct()
+    return _bfs_levels(edges, frontier, [], max_depth, src, dst)
 
 
 def sssp_weighted(
@@ -508,49 +504,18 @@ def bfs_depths_multi(
     dst: str = "dst",
     source_col: str = "source",
 ) -> DataFrame:
-    """Multi-source BFS: `bfs_depths` run for every seed AT ONCE, with
-    the frontier keyed by (source, node) — one distributed expansion
-    whose per-level work is the union of all seeds' frontiers, instead
-    of a driver loop of k separate traversals (k jobs/level → 1).
-    The closeness-centrality primitive: per-seed depth sums fall out
-    of one aggregation over the result.
-
-    `sources` is a 1-column frame of seed nodes; output is
-    (source, node, depth) — the minimum hop count of each reached node
-    FROM EACH seed, visited sets tracked independently per seed by the
-    composite key. Same pinning discipline as bfs_depths (every level
-    re-reads frontier and visited; cross-job exchange reuse does not
-    exist), same per-level driver scalar (global frontier size).
-    """
-    if max_depth < 0:
-        raise ValueError("max_depth must be >= 0")
-    e = edges.select(F.col(src).alias("__s"), F.col(dst).alias("__d"))
+    """Multi-source BFS: `bfs_depths` for every seed of the 1-column
+    `sources` AT ONCE, in one expansion keyed by (source, node), so k
+    seeds cost one traversal, not k. Returns (source, node, depth): the
+    minimum hop count of each reached node FROM EACH seed, with one
+    visited set per seed. Closeness per seed is one aggregation over
+    the result."""
     frontier = (
         sources.select(F.col(sources.columns[0]).alias(source_col))
         .distinct()
         .select(source_col, F.col(source_col).alias("node"))
-        .localCheckpoint(eager=True)
     )
-    known = frontier.withColumn("depth", F.lit(0).cast("long"))
-    known = known.localCheckpoint(eager=True)
-    for d in range(1, max_depth + 1):
-        nxt = (
-            frontier.join(e, frontier["node"] == e["__s"])
-            .select(source_col, F.col("__d").alias("node"))
-            .distinct()
-            .join(
-                known.select(source_col, "node"),
-                [source_col, "node"],
-                "left_anti",
-            )
-        ).localCheckpoint(eager=True)
-        if nxt.count() == 0:
-            break
-        known = known.unionByName(
-            nxt.withColumn("depth", F.lit(d).cast("long"))
-        ).localCheckpoint(eager=True)
-        frontier = nxt
-    return known
+    return _bfs_levels(edges, frontier, [source_col], max_depth, src, dst)
 
 
 def label_propagation(

@@ -410,8 +410,10 @@ SELECT node AS part_key, depth FROM k{max_depth}"""
 
 def _bfs_depths_audit(spark: SparkSession, sf_dir: str):
     """Plan-audit hook: edge build plus ONE lazy BFS level (frontier-
-    edge join + distinct + visited anti join — the per-level shape
-    operators/graph.bfs_depths pins eagerly each round)."""
+    edge join + distinct + visited anti join — the per-level shape of
+    the level loop operators/graph.bfs_depths and bfs_depths_multi
+    share, which pins the edge list once and each level's frontier and
+    visited set eagerly)."""
     li = load_table(spark, sf_dir, "lineitem")
     e = G.cooccurrence_edges(li, "l_orderkey", "l_partkey")
     frontier = e.agg(F.min("src").alias("node"))

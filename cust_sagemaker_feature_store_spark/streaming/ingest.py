@@ -34,12 +34,11 @@ from ..core.feature_group import FeatureGroup
 from ..core.feature_store import (
     DELETED_COL,
     EVENT_DATE_COL,
-    EVENT_TS_COL,
     INGEST_SEQ_COL,
+    normalize_batch,
 )
 from ..core.online import DEFAULT_N_BUCKETS, upsert_bucketed_snapshot
 from ..functions.ids import with_dense_row_ids
-from ..functions.timeutil import format_iso_z, parse_iso_z
 
 # ingest_seq = batch_id * BATCH_SEQ_STRIDE + dense row id. Dense ids
 # (functions/ids.py) are bounded by the batch's ROW COUNT, so the
@@ -82,34 +81,6 @@ class StreamingIngest:
 
     # -- micro-batch sink --------------------------------------------------
 
-    def _normalize(self, batch: DataFrame) -> DataFrame:
-        """Schema-validate, cast, and time-normalize one micro-batch —
-        everything BEFORE id assignment, so the caller can persist the
-        result and the dense-id counts job + both store writes all see
-        one materialization (round-2 advice, functions/ids.py:38)."""
-        tcol = self.group.event_time_feature
-        # validate the feature columns (tombstone marker is internal),
-        # then project features + flag from the SAME frame so rows stay
-        # aligned — mirrors FeatureStore.ingest
-        self.group.validate_frame(batch.drop(DELETED_COL))
-        flag = (
-            F.coalesce(F.col(DELETED_COL).cast("boolean"), F.lit(False))
-            if DELETED_COL in batch.columns
-            else F.lit(False)
-        ).alias(DELETED_COL)
-        base = batch.select(
-            *[
-                batch[f.name].cast(f.spark_type).alias(f.name)
-                for f in self.group.features
-            ],
-            flag,
-        )
-        return (
-            base.withColumn(EVENT_TS_COL, parse_iso_z(tcol))
-            .withColumn(tcol, format_iso_z(EVENT_TS_COL))
-            .withColumn(EVENT_DATE_COL, F.to_date(F.col(EVENT_TS_COL)))
-        )
-
     def _assign_seq(self, normalized: DataFrame, batch_id: int) -> DataFrame:
         # dense per-batch ids under a batch-id epoch: later micro-batches
         # always win event-time ties (later-write-wins), at ANY partition
@@ -136,7 +107,10 @@ class StreamingIngest:
         )
 
     def process_batch(self, batch: DataFrame, batch_id: int) -> None:
-        normalized = self._normalize(batch)
+        # normalize BEFORE id assignment, so the persisted result feeds
+        # the dense-id counts job and both store writes from one
+        # materialization (functions/ids.py)
+        normalized = normalize_batch(self.group, batch)
         normalized.persist()
         try:
             # empty micro-batch (e.g. a trigger with no new files):

@@ -367,6 +367,30 @@ def test_high_water_mark_counts_rows_that_lose_latest_wins(store, monkeypatch):
     assert d["latest_purchase_value"] == "60.0"
 
 
+def test_null_deleted_flag_is_a_live_record(store):
+    # a null is_deleted marks no tombstone: upsert_online must serve the
+    # keys exactly as latest_view does, not store a null flag that the
+    # serving filter then drops
+    store.materialize_online(GROUP.name)
+    batch = store.spark.createDataFrame(
+        [
+            (1, "2023-06-01T00:00:00Z", 61.0, 0.6, None),
+            (2, "2023-06-01T00:00:00Z", 62.0, 0.7, None),
+        ],
+        SCHEMA4 + ", is_deleted boolean",
+    )
+    store.upsert_online(GROUP.name, store.ingest(GROUP.name, batch))
+    latest = {r["customer_id"] for r in store.latest_view(GROUP.name).collect()}
+    online = {r["customer_id"] for r in store.online_store(GROUP.name).collect()}
+    assert {1, 2} <= latest
+    assert online == latest
+    for key, value in [(1, "61.0"), (2, "62.0")]:
+        rec = store.get_record(GROUP.name, key)
+        assert rec is not None, key
+        d = {f["FeatureName"]: f["ValueAsString"] for f in rec}
+        assert d["latest_purchase_value"] == value
+
+
 def test_upsert_keeps_an_older_64_bucket_layout(store, spark):
     # a snapshot built under the former 64-bucket default must keep
     # being merged and served with 64 buckets: the sidecar wins over

@@ -223,7 +223,8 @@ def test_kcore_peels_tail_keeps_triangle(spark):
 def test_bfs_depths_match_naive_bfs(spark):
     """Distributed level-synchronous BFS equals a python BFS (minimum
     hop counts) on seeded random digraphs, including the bounded-depth
-    cutoff and an unreachable component."""
+    cutoff, an unreachable component, and several sources sharing one
+    visited set."""
     import random
     from collections import deque
 
@@ -235,30 +236,29 @@ def test_bfs_depths_match_naive_bfs(spark):
     for trial, (n, m, max_depth) in enumerate([(30, 60, 4), (50, 80, 6), (40, 40, 3)]):
         edges = {(rng.randrange(n), rng.randrange(n)) for _ in range(m)}
         edges = {(a, b) for a, b in edges if a != b}
-        # keep an island unreachable: no edges INTO nodes >= n (sources only)
-        src_nodes = [0]
         adj: dict[int, list[int]] = {}
         for a, b in edges:
             adj.setdefault(a, []).append(b)
-        want = {0: 0}
-        q = deque([(0, 0)])
-        while q:
-            u, d = q.popleft()
-            if d == max_depth:
-                continue
-            for v in adj.get(u, []):
-                if v not in want:
-                    want[v] = d + 1
-                    q.append((v, d + 1))
         e_df = spark.createDataFrame(
             [Row(src=a, dst=b) for a, b in sorted(edges)]
         )
-        s_df = spark.createDataFrame([Row(node=s) for s in src_nodes])
-        got = {
-            r["node"]: r["depth"]
-            for r in bfs_depths(e_df, s_df, max_depth=max_depth).collect()
-        }
-        assert got == want, (trial, n, m, max_depth)
+        for src_nodes in ([0], [0, n // 2]):
+            want = {s: 0 for s in src_nodes}
+            q = deque((s, 0) for s in src_nodes)
+            while q:
+                u, d = q.popleft()
+                if d == max_depth:
+                    continue
+                for v in adj.get(u, []):
+                    if v not in want:
+                        want[v] = d + 1
+                        q.append((v, d + 1))
+            s_df = spark.createDataFrame([Row(node=s) for s in src_nodes])
+            got = {
+                r["node"]: r["depth"]
+                for r in bfs_depths(e_df, s_df, max_depth=max_depth).collect()
+            }
+            assert got == want, (trial, n, m, max_depth, src_nodes)
 
 
 def test_bfs_source_not_in_graph_survives(spark):

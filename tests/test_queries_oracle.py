@@ -4,6 +4,7 @@
 from __future__ import annotations
 
 import pytest
+from pyspark.sql.types import ArrayType, MapType, StructType
 
 from cust_sagemaker_feature_store_spark.queries import REGISTRY
 from cust_sagemaker_feature_store_spark.testing import compare_spark_to_oracle
@@ -13,6 +14,16 @@ from cust_sagemaker_feature_store_spark.testing import compare_spark_to_oracle
 def test_query_matches_oracle(name, spark, duck, sf_dir):
     spec = REGISTRY[name]
     sdf = spec.fn(spark, sf_dir)
+    # flat scalar columns only: a pandas result canonicalizer that sorts
+    # rows dies on unhashable Python lists (`text_inverted_index` failed
+    # that way in r5, while the local replica, which normalizes lists,
+    # passed it)
+    nested = [
+        f"{f.name}: {f.dataType.simpleString()}"
+        for f in sdf.schema.fields
+        if isinstance(f.dataType, (ArrayType, MapType, StructType))
+    ]
+    assert not nested, f"{name}: flatten nested output columns {nested}"
     if spec.oracle is None:
         # rows-only contract: must execute and return a stable schema
         assert sdf.count() >= 0
@@ -97,33 +108,6 @@ def test_registry_window_prioritizes_unverified():
         assert not wasted, f"green queries wasting window slots: {wasted}"
     # the freshly-repaired / invalidated queries lead the window
     assert names[: len(_WINDOW_PRIORITY)] == _WINDOW_PRIORITY
-
-
-def test_registered_output_schemas_are_flat(spark, sf_dir):
-    """No ArrayType/MapType/StructType in any registered query's output:
-    the driver's pandas canonicalizer sorts result columns and dies on
-    unhashable Python lists (`text_inverted_index` burned its r5 window
-    slot exactly this way — the local replica normalizes lists, so only
-    the driver saw the crash). Nested results must be flattened (e.g.
-    array_join) BEFORE registration, so the next array-out query fails
-    here, not in the driver. Cost note (ADVICE r6): reading `.schema`
-    is analysis-only for declarative queries, but the driver-evidence
-    queries do real work BUILDING their DataFrame (ml_logreg_newton
-    trains its Newton iterations, graph_kcore_floor runs the peeling
-    fixpoint, the IVF-PQ floors build their index) — construction cost
-    is the price of covering those schemas, and it is paid here."""
-    from pyspark.sql.types import ArrayType, MapType, StructType
-
-    offenders = []
-    for name, spec in REGISTRY.items():
-        schema = spec.fn(spark, sf_dir).schema
-        for f in schema.fields:
-            if isinstance(f.dataType, (ArrayType, MapType, StructType)):
-                offenders.append(f"{name}.{f.name}: {f.dataType.simpleString()}")
-    assert not offenders, (
-        "registered queries must output flat scalar columns "
-        f"(driver canonicalizer contract): {offenders}"
-    )
 
 
 def test_every_query_is_documented_in_coverage():

@@ -1,9 +1,11 @@
 """Capture `.explain("formatted")` output for named registry queries.
 
-Writes plans/$PLANS_ROUND/<query>_<tag>.txt (default r17) for each query — the before/after
+Writes plans/$PLANS_ROUND/<query>_<tag>.txt for each query — the before/after
 plan evidence the optimization rounds commit alongside code changes.
+PLANS_ROUND (e.g. r18) is required: without it the script exits 2
+instead of filing plans under an old round.
 
-Usage: python tools/capture_plans.py <tag> [sf_dir] <query ...>
+Usage: PLANS_ROUND=<round> python tools/capture_plans.py <tag> [sf_dir] <query ...>
   tag     "before" or "after" (file suffix)
   sf_dir  optional, defaults to /root/testdata/sf0.1
 """
@@ -30,10 +32,14 @@ def main() -> int:
     if rest and rest[0].startswith("/"):
         sf_dir, rest = rest[0], rest[1:]
     names = rest
+    plans_round = os.environ.get("PLANS_ROUND")
+    if not plans_round:
+        print("PLANS_ROUND is not set (e.g. PLANS_ROUND=r18)", file=sys.stderr)
+        return 2
     out_dir = os.path.join(
         os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
         "plans",
-        os.environ.get("PLANS_ROUND", "r17"),
+        plans_round,
     )
     os.makedirs(out_dir, exist_ok=True)
     spark = get_spark("capture_plans")
