@@ -488,7 +488,7 @@ def main() -> None:
             # the measurement honest — a stale snapshot would silently
             # fall back to the derived latest view and time the wrong
             # path.
-            if not fs_inc._snapshot_is_fresh("BenchEventsInc"):
+            if fs_inc._fresh_snapshot_meta("BenchEventsInc") is None:
                 raise RuntimeError(
                     "snapshot stale: point lookup would measure the "
                     "derived-view fallback, not the pruned serving path"

@@ -35,6 +35,7 @@ from .online import (
     BUCKET_COL,
     DEFAULT_N_BUCKETS,
     bucket_expr,
+    read_snapshot,
     read_snapshot_bucket,
     read_snapshot_meta,
     snapshot_exists,
@@ -126,7 +127,6 @@ class FeatureStore:
         name: str,
         df: DataFrame,
         loose_timestamp: bool = False,
-        base_seq: int = 0,
     ) -> DataFrame:
         """Append a batch to the offline store (append-only history).
 
@@ -142,10 +142,9 @@ class FeatureStore:
         ``base`` is the tracked next-free sequence — seeded from
         ``max(ingest_seq)`` in the stored history when this instance
         first touches the group, advanced by the batch's exact row
-        count after. ``base_seq`` acts as a floor (never lowers the
-        base), kept for callers that partition the id space themselves.
-        Later-write-wins ties (including delete tombstones) therefore
-        resolve by ingest order, never by partition layout.
+        count after. Later-write-wins ties (including delete
+        tombstones) therefore resolve by ingest order, never by
+        partition layout.
         """
         normalized = normalize_batch(self._groups[name], df, loose_timestamp)
         # persist BEFORE tagging: the dense-id counts job, the offline
@@ -162,7 +161,7 @@ class FeatureStore:
         if prev is not None:
             prev.unpersist()
         self._pinned[name] = normalized
-        base = max(self._seq_base(name), base_seq)
+        base = self._seq_base(name)
         with_ids, n_rows = with_dense_row_ids(normalized, "__did")
         out = with_ids.withColumn(
             INGEST_SEQ_COL, F.col("__did") + F.lit(base)
@@ -196,7 +195,7 @@ class FeatureStore:
         return self._next_seq[name]
 
     def delete_record(
-        self, name: str, record_identifier_value, event_time_iso: str, base_seq: int = 0
+        self, name: str, record_identifier_value, event_time_iso: str
     ) -> None:
         """Soft delete (public SageMaker delete_record semantics): append
         a tombstone to the append-only history. The key disappears from
@@ -211,7 +210,7 @@ class FeatureStore:
             [tuple(row.get(c) for c in group.feature_names)],
             group.schema,
         ).withColumn(DELETED_COL, F.lit(True))
-        self.ingest(name, df, base_seq=base_seq)
+        self.ingest(name, df)
 
     # -- offline reads (S4, P1, P2) ---------------------------------------
 
@@ -283,30 +282,33 @@ class FeatureStore:
             *group.feature_names
         )
 
-    def _snapshot_is_fresh(self, name: str) -> bool:
-        """True when the materialized snapshot has merged every ingested
-        sequence. The sidecar's high-water mark vs the store's next-free
-        sequence (session-cached after first use) makes staleness
-        explicit: an ingest/delete not followed by upsert_online used to
-        be silently invisible to point lookups (round-2 advice,
-        feature_store.py:221)."""
+    def _fresh_snapshot_meta(self, name: str) -> dict | None:
+        """The snapshot's sidecar if the snapshot has merged every
+        ingested sequence (its high-water mark vs the session-cached
+        next-free sequence), else None: an ingest/delete not followed by
+        upsert_online must not be invisible to lookups (round-2 advice,
+        feature_store.py:221). A sidecar with no schema counts as stale."""
         meta = read_snapshot_meta(self.spark, self.online_path(name))
-        if meta is None:
-            return False
-        return int(meta["seq_high"]) >= self._seq_base(name) - 1
+        if meta is None or "schema" not in meta:
+            return None
+        return meta if int(meta["seq_high"]) >= self._seq_base(name) - 1 else None
 
-    def _serving_view(self, name: str, key_values: list) -> DataFrame:
-        """Lookup path for the given keys: bucket-pruned scan of the
-        materialized snapshot when present AND current (reads
-        ~1/n_buckets of the store); a missing or stale snapshot falls
-        back to the always-fresh derived latest view."""
+    def _serving_view(self, name: str, key_values: list | None = None) -> DataFrame:
+        """The one serving read: the materialized snapshot when present
+        AND current — bucket-pruned to ``key_values`` when given (reads
+        ~1/n_buckets of the store) — else the always-fresh derived
+        latest view. One sidecar read; tombstoned keys are filtered at
+        read (the stored snapshot keeps them, see _latest_raw)."""
         group = self._groups[name]
-        if not self._snapshot_is_fresh(name):
+        meta = self._fresh_snapshot_meta(name)
+        if meta is None:
             return self.latest_view(name)
-        snap = read_snapshot_bucket(
-            self.spark, self.online_path(name),
-            [group.record_identifier], key_values,
-        )
+        path = self.online_path(name)
+        if key_values is None:
+            snap = read_snapshot(self.spark, path, meta)
+        else:
+            keys = [group.record_identifier]
+            snap = read_snapshot_bucket(self.spark, path, keys, key_values, meta)
         return snap.filter(~F.col(DELETED_COL)).select(*group.feature_names)
 
     def get_record(
@@ -331,8 +333,8 @@ class FeatureStore:
         """[EXT] Batch point lookup (public SageMaker batch_get_record
         analog): latest record for each requested key, absent keys
         omitted. One lookup for N keys — an IN-filter over the serving
-        view, pruned to the keys' buckets — instead of N point queries;
-        it still runs several Spark jobs (sidecar read, listing, scan)."""
+        view, pruned to the keys' buckets — instead of N point queries:
+        one sidecar read and one scan job on a fresh snapshot."""
         group = self._groups[name]
         rows = (
             self._serving_view(name, record_identifier_values)
@@ -366,7 +368,7 @@ class FeatureStore:
         lookups prune to one bucket. Correct under any arrival order;
         the recovery/bootstrap path — steady-state refreshes should use
         `upsert_online`. Records the bucket count and ingest high-water
-        mark in the snapshot sidecar (core/online.py)."""
+        mark and the snapshot schema in its sidecar (core/online.py)."""
         group = self._groups[name]
         # high-water mark BEFORE the build: history is append-only, so
         # the snapshot covers at least everything up to this sequence
@@ -375,10 +377,11 @@ class FeatureStore:
         snap = self._latest_raw(name).withColumn(
             BUCKET_COL, bucket_expr([group.record_identifier], n_buckets)
         )
+        path = self.online_path(name)
         snap.write.partitionBy(BUCKET_COL).mode("overwrite").parquet(
-            self.online_path(name), compression="snappy"
+            path, compression="snappy"
         )
-        write_snapshot_meta(self.spark, self.online_path(name), n_buckets, seq_high)
+        write_snapshot_meta(self.spark, path, n_buckets, seq_high, snap.schema)
 
     def upsert_online(
         self, name: str, batch: DataFrame, n_buckets: int | None = None
@@ -405,15 +408,9 @@ class FeatureStore:
 
     def online_store(self, name: str) -> DataFrame:
         """Serving view: the materialized snapshot when present AND
-        current (point lookups hit a key-sized table, not all of
-        history), else the derived latest view. Tombstoned keys are
-        filtered at read — the stored snapshot keeps them (see
-        _latest_raw)."""
-        group = self._groups[name]
-        if not self._snapshot_is_fresh(name):
-            return self.latest_view(name)
-        snap = self.spark.read.parquet(self.online_path(name))
-        return snap.filter(~F.col(DELETED_COL)).select(*group.feature_names)
+        current (a key-sized table, not all of history), else the
+        derived latest view (see _serving_view)."""
+        return self._serving_view(name)
 
     def feature_vector(
         self,

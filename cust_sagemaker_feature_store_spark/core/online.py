@@ -24,16 +24,19 @@ identical.
 
 The snapshot directory carries a ``_snapshot_meta.json`` sidecar (an
 underscore-prefixed file, so parquet readers skip it — the _SUCCESS
-convention) recording the bucket count and the highest ingest sequence
-merged. The bucket count is the snapshot's PHYSICAL layout: a reader
-or upserter hashing with a different count would prune the wrong
-partitions and silently miss keys (round-2 advice, online.py:105) —
-so both paths resolve the count FROM the sidecar and refuse an
-explicit conflicting override. The sequence high-water mark lets the
-serving path detect a stale snapshot and fall back to the derived
-latest view (round-2 advice, feature_store.py:221). It is the max over
-EVERY incoming row, not over the per-key winners: a row that loses the
-latest-wins race has still been merged.
+convention) describing the snapshot: bucket count, highest ingest
+sequence merged, and schema. The bucket count is PHYSICAL layout: a
+reader or upserter hashing with a different count would prune the wrong
+partitions and silently miss keys (round-2 advice, online.py:105) — so
+readers take it FROM the sidecar and the upserter refuses an explicit
+conflicting override. The high-water mark lets the serving path detect
+a stale snapshot and fall back to the derived latest view (round-2
+advice, feature_store.py:221); it is the max over EVERY incoming row,
+not the per-key winners (a row that loses latest-wins was still
+merged). Reads use the recorded schema, so a point lookup runs one
+Spark job and no footer schema inference; a sidecar without a schema
+(written before it was recorded) reads as stale until the next upsert
+or full rebuild rewrites it.
 
 The default is 16 buckets: above Spark's 32-subdirectory
 ``parallelPartitionDiscovery.threshold`` every snapshot read starts a
@@ -58,6 +61,7 @@ import json
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from ..operators.latest import latest_snapshot
 
@@ -89,13 +93,13 @@ def snapshot_exists(spark: SparkSession, snapshot_dir: str) -> bool:
 
 
 def write_snapshot_meta(
-    spark: SparkSession, snapshot_dir: str, n_buckets: int, seq_high: int
+    spark: SparkSession, snapshot_dir: str, n_buckets: int, seq_high: int,
+    schema: T.StructType,
 ) -> None:
+    meta = {"n_buckets": n_buckets, "seq_high": seq_high, "schema": schema.jsonValue()}
     fs, p = _hadoop(spark, snapshot_dir + "/" + META_FILE)
     out = fs.create(p, True)
-    out.write(bytearray(
-        json.dumps({"n_buckets": n_buckets, "seq_high": seq_high}).encode()
-    ))
+    out.write(bytearray(json.dumps(meta).encode()))
     out.close()
 
 
@@ -183,13 +187,15 @@ def upsert_bucketed_snapshot(
         writer.partitionBy(BUCKET_COL).mode("overwrite").parquet(
             snapshot_dir, compression="snappy"
         )
-        write_snapshot_meta(spark, snapshot_dir, n, seq_high)
+        write_snapshot_meta(spark, snapshot_dir, n, seq_high, merged.schema)
     finally:
         batch.unpersist()
 
 
-def read_snapshot(spark: SparkSession, snapshot_dir: str) -> DataFrame:
-    return spark.read.parquet(snapshot_dir)
+def read_snapshot(spark: SparkSession, snapshot_dir: str, meta: dict) -> DataFrame:
+    """The snapshot, read with the schema its sidecar ``meta`` records."""
+    schema = T.StructType.fromJson(meta["schema"])
+    return spark.read.schema(schema).parquet(snapshot_dir)
 
 
 def read_snapshot_bucket(
@@ -197,23 +203,17 @@ def read_snapshot_bucket(
     snapshot_dir: str,
     keys: list[str] | str,
     key_values: list,
-    n_buckets: int | None = None,
+    meta: dict,
 ) -> DataFrame:
     """Point/batch lookup path: prune the scan to the bucket partitions
-    the requested keys hash into (single-key groups only).
-
-    The bucket count comes from the snapshot's sidecar; a pre-sidecar
-    snapshot (no meta) is served UNPRUNED — correct, just a full scan —
-    rather than guessed at (a wrong guess silently misses keys)."""
+    the requested keys hash into (single-key groups only), with the
+    bucket count and key type from the snapshot's sidecar ``meta``."""
     key_list = [keys] if isinstance(keys, str) else list(keys)
-    meta = read_snapshot_meta(spark, snapshot_dir)
-    snap = spark.read.parquet(snapshot_dir)
-    if meta is None and n_buckets is None:
-        return snap
-    n = _resolve_n_buckets(meta, n_buckets, snapshot_dir)
+    snap = read_snapshot(spark, snapshot_dir, meta)
     # hash literals cast to the stored key type (xxhash64 of an int and
     # of a long differ); Catalyst folds each to a constant, so the
     # pruning needs no probe job
-    dtype = dict(snap.dtypes)[key_list[0]]
+    dtype = snap.schema[key_list[0]].dataType
+    n = int(meta["n_buckets"])
     buckets = [bucket_expr([F.lit(v).cast(dtype)], n) for v in key_values]
     return snap.filter(F.col(BUCKET_COL).isin(buckets))

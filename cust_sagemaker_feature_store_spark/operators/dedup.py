@@ -27,6 +27,7 @@ from functools import reduce
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from .spread import spread_for_compute
 from .text import content_fingerprint, shingles, tokens
 
 
@@ -53,7 +54,7 @@ def shingle_sets(
     """Distinct (id, shingle) pairs — the input relation for Jaccard
     and MinHash."""
     return (
-        _ensure_parallelism(df)
+        spread_for_compute(df)
         .select(F.col(id_col), F.explode(shingles(tokens(text_col), k)).alias("shingle"))
         .distinct()
     )
@@ -359,20 +360,9 @@ def minhash_signatures(
             F.transform(F.col("_mh_h"), lambda h: F.substring(h, 1 + 8 * s, 8))
         ).alias(f"mh{s}")
 
-    df = _ensure_parallelism(df)
+    df = spread_for_compute(df)
     hashed = df.withColumn("_mh_h", F.transform(shingles(tokens(text_col), k), F.md5))
     return hashed.select(F.col(id_col), *[slice_min(s) for s in range(num_hashes)])
-
-
-def _ensure_parallelism(df: DataFrame) -> DataFrame:
-    """Spread a narrow-source frame across the cluster before CPU-heavy
-    per-row work. A small-SF corpus arrives as one parquet file = one
-    scan partition, serializing the md5/shingle pipeline; at real scale
-    the scan already has >= defaultParallelism splits and this is a
-    no-op, so the raw text is never shuffled unnecessarily."""
-    from .spread import spread_for_compute
-
-    return spread_for_compute(df)
 
 
 def minhash_candidates(
@@ -496,7 +486,7 @@ def simhash64(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> 
     tests (near-identical docs -> small Hamming distance), exposed as a
     rows-only query. One narrow pass + one groupBy(doc).
     """
-    tok = _ensure_parallelism(df).select(
+    tok = spread_for_compute(df).select(
         F.col(id_col), F.explode(tokens(text_col)).alias("token")
     )
     h = tok.withColumn("h", F.xxhash64("token"))
@@ -703,7 +693,7 @@ def containment_pairs(
     ga = garr.select(F.col(id_col).alias("doc_a"), F.col("__g").alias("__ga"))
     gb = garr.select(F.col(id_col).alias("doc_b"), F.col("__g").alias("__gb"))
     out = (
-        _ensure_parallelism(cand)
+        spread_for_compute(cand)
         .join(ga, "doc_a")
         .join(gb, "doc_b")
         .select(

@@ -29,8 +29,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from .dedup import _ensure_parallelism
 from . import text as T
+from .spread import spread_for_compute
 
 SCORE_SCALE = 1_000_000
 
@@ -44,7 +44,7 @@ def term_frequencies(
     measured 5x on the one-file fixture — the explode+group pipeline
     was serializing on one core)."""
     toks = T.tokens(text_col)
-    exploded = _ensure_parallelism(docs).select(
+    exploded = spread_for_compute(docs).select(
         F.col(id_col), F.size(toks).alias("dl"), F.explode(toks).alias("term")
     )
     return exploded.groupBy(id_col, "dl", "term").agg(

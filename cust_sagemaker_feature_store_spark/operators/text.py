@@ -18,6 +18,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from .spread import spread_for_compute
+
 TOKEN_SPLIT_RE = r"\s+"
 
 # Tiny per-language stopword profiles for the rule-based language-ID
@@ -134,9 +136,7 @@ def winnow_fingerprint_rows(
     higher-order-function lambdas, and CollapseProject re-inlines plain
     projections. The Generate barrier pins one evaluation per row while
     staying map-side (no shuffle, no Python)."""
-    from .dedup import _ensure_parallelism
-
-    df = _ensure_parallelism(df)
+    df = spread_for_compute(df)
     t = F.lower(F.trim(F.col(text_col)))
     # gram positions 1..len-k+1 (min 1 so short docs yield one gram)
     hi_g = F.greatest(F.length(t) - F.lit(k - 2), F.lit(2))
@@ -209,11 +209,9 @@ def contamination_overlap(
     """
     if strategy not in ("auto", "broadcast", "shuffle"):
         raise ValueError(f"unknown strategy {strategy!r}")
-    from .dedup import _ensure_parallelism
-
     bench_id_col = bench_id_col or id_col
     bench_text_col = bench_text_col or text_col
-    grams = _ensure_parallelism(corpus).select(
+    grams = spread_for_compute(corpus).select(
         F.col(id_col).alias("doc_id"),
         F.explode(F.array_distinct(shingles(tokens(text_col), gram_n))).alias("gram"),
     )
@@ -267,9 +265,7 @@ def doc_line_segments(
     scale. Returns (doc_id, line_no, line)."""
     if line_tokens < 1:
         raise ValueError("line_tokens must be >= 1")
-    from .dedup import _ensure_parallelism
-
-    docs = _ensure_parallelism(docs)
+    docs = spread_for_compute(docs)
     toks = tokens(text_col)
     n_seg = F.greatest(
         F.ceil(F.size(toks) / float(line_tokens)).cast("int"), F.lit(1)
@@ -390,9 +386,7 @@ def repeated_span_coverage(
     one whole-doc window (the `shingles` convention)."""
     if gram_tokens < 1:
         raise ValueError("gram_tokens must be >= 1")
-    from .dedup import _ensure_parallelism
-
-    docs = _ensure_parallelism(docs)
+    docs = spread_for_compute(docs)
     toks = tokens(text_col)
     n = F.size(toks)
     n_win = F.greatest(n - F.lit(gram_tokens - 1), F.lit(1))
@@ -524,9 +518,7 @@ def shared_span_pairs(
         raise ValueError("gram_tokens must be >= 1")
     if max_occ < 2:
         raise ValueError("max_occ must be >= 2")
-    from .dedup import _ensure_parallelism
-
-    docs = _ensure_parallelism(docs)
+    docs = spread_for_compute(docs)
     toks = tokens(text_col)
     n = F.size(toks)
     n_win = F.greatest(n - F.lit(gram_tokens - 1), F.lit(1))

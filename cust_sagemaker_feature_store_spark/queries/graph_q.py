@@ -448,6 +448,7 @@ def _bfs_depths_audit(spark: SparkSession, sf_dir: str):
 def graph_bfs_depths(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem")
     edges = G.cooccurrence_edges(li, "l_orderkey", "l_partkey")
+    edges = edges.localCheckpoint(eager=True)  # consumed by the seed + BFS
     sources = edges.agg(F.min("src").alias("node"))
     depths = G.bfs_depths(edges, sources, max_depth=BFS_MAX_DEPTH)
     return depths.select(F.col("node").alias("part_key"), "depth")
@@ -622,6 +623,7 @@ GROUP BY source"""
 def graph_closeness_seeds(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem")
     edges = G.cooccurrence_edges(li, "l_orderkey", "l_partkey")
+    edges = edges.localCheckpoint(eager=True)  # consumed by the seeds + BFS
     seeds = (
         edges.select(F.col("src").alias("node"))
         .distinct()

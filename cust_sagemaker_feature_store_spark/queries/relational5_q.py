@@ -10,6 +10,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import load_table
 from ..operators import dedup as D
+from ..operators.spread import spread_for_compute
 from .registry import register, sql_dsum
 
 
@@ -160,9 +161,7 @@ JOIN documents db ON db.doc_id = c.doc_b
     ),
 )
 def dedup_levenshtein_verify(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.dedup import _ensure_parallelism
-
-    docs = _ensure_parallelism(load_table(spark, sf_dir, "documents"))
+    docs = spread_for_compute(load_table(spark, sf_dir, "documents"))
     cand = D.minhash_candidates(docs, num_hashes=4, rows_per_band=2).select(
         "doc_a", "doc_b"
     )

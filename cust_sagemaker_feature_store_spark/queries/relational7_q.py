@@ -27,6 +27,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
+from ..operators.spread import spread_for_compute
 from .registry import register
 
 # -- sharded prefix sum --------------------------------------------------
@@ -890,11 +891,9 @@ FROM scored GROUP BY 1
 )
 def text_lm_doc_nll(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators import text as T
-    from ..operators.dedup import _ensure_parallelism
-
     docs = load_table(spark, sf_dir, "documents")
     toks = T.tokens("text")
-    tok = _ensure_parallelism(docs).select("doc_id", toks.alias("toks"))
+    tok = spread_for_compute(docs).select("doc_id", toks.alias("toks"))
 
     # lazy pins: uni feeds vocab-count + the c_w1 join; bi_all feeds the
     # LM counts + the per-doc scoring stream (the text_bigram_lm

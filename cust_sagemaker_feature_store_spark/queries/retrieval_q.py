@@ -16,6 +16,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import load_table
 from ..operators import retrieval as R
+from ..operators.spread import spread_for_compute
 from .registry import register
 from .text_q import SQL_TOKS
 
@@ -202,11 +203,9 @@ LIMIT {LIFT_TOP_K}
 )
 def text_bigram_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators import text as T
-    from ..operators.dedup import _ensure_parallelism
-
     docs = load_table(spark, sf_dir, "documents")
     toks = T.tokens("text")
-    tok = _ensure_parallelism(docs).select("doc_id", toks.alias("toks"))
+    tok = spread_for_compute(docs).select("doc_id", toks.alias("toks"))
 
     # lazy pins: the unigram table feeds three branches (total count +
     # both join sides) and the unfiltered bigram table two (total mass
@@ -299,12 +298,10 @@ HAVING CAST(SUM(sgn) AS BIGINT) <> 0
     ),
 )
 def ml_hashed_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.dedup import _ensure_parallelism
-
     docs = load_table(spark, sf_dir, "documents")
     from ..operators import text as T
 
-    tok = _ensure_parallelism(docs).select(
+    tok = spread_for_compute(docs).select(
         "doc_id", F.explode(T.tokens("text")).alias("token")
     )
     h = F.conv(F.substring(F.md5("token"), 1, 4), 16, 10).cast("long")
@@ -421,11 +418,9 @@ LIMIT {LM_TOP_K}
 )
 def text_bigram_lm(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators import text as T
-    from ..operators.dedup import _ensure_parallelism
-
     docs = load_table(spark, sf_dir, "documents")
     toks = T.tokens("text")
-    tok = _ensure_parallelism(docs).select("doc_id", toks.alias("toks"))
+    tok = spread_for_compute(docs).select("doc_id", toks.alias("toks"))
 
     # lazy pin: the vocab total and the c_w1 join side both read the
     # unigram table; unpinned each re-tokenizes the corpus (3 scans -> 2)
@@ -498,11 +493,9 @@ FROM tok
 )
 def text_word_dropout(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators import text as T
-    from ..operators.dedup import _ensure_parallelism
-
     docs = load_table(spark, sf_dir, "documents")
     toks = T.tokens("text")
-    tok = _ensure_parallelism(docs).select("doc_id", toks.alias("toks"))
+    tok = spread_for_compute(docs).select("doc_id", toks.alias("toks"))
 
     def keep(i):
         h = F.md5(

@@ -15,6 +15,7 @@ from pyspark.sql import functions as F
 from ..catalog import load_table
 from ..operators import dedup as D
 from ..operators import text as T
+from ..operators.spread import spread_for_compute
 from .registry import register
 
 # -- shared DuckDB fragments (must mirror operators/text.py exactly) ----
@@ -433,9 +434,7 @@ FROM h
 )
 def text_winnow_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
-    from ..operators.dedup import _ensure_parallelism
-
-    return T.winnow_fingerprint_rows(_ensure_parallelism(docs), k=8, w=4)
+    return T.winnow_fingerprint_rows(spread_for_compute(docs), k=8, w=4)
 
 
 @register(
@@ -493,9 +492,7 @@ WHERE (CASE WHEN n_tokens BETWEEN 20 AND 2000 THEN 1 ELSE 0 END
     ),
 )
 def pipeline_clean_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.dedup import _ensure_parallelism
-
-    docs = _ensure_parallelism(load_table(spark, sf_dir, "documents"))
+    docs = spread_for_compute(load_table(spark, sf_dir, "documents"))
     # 1. exact content dedup — one row per distinct normalized content
     keep = (
         docs.groupBy(T.content_fingerprint("text").alias("h"))
@@ -854,9 +851,7 @@ FROM m
     ),
 )
 def text_repetition_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.dedup import _ensure_parallelism
-
-    docs = _ensure_parallelism(load_table(spark, sf_dir, "documents"))
+    docs = spread_for_compute(load_table(spark, sf_dir, "documents"))
     toks = T.tokens("text")
     n = F.size(toks)
     g2 = T.shingles(toks, 2)
@@ -961,12 +956,10 @@ fp16 AS (
 
 
 def _spark_simhash16(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.dedup import _ensure_parallelism
-
     # spread the single-file corpus before the md5-vote map side — the
     # 16 per-bit conditional sums over every token otherwise partial-
     # aggregate inside the one scan task
-    docs = _ensure_parallelism(load_table(spark, sf_dir, "documents"))
+    docs = spread_for_compute(load_table(spark, sf_dir, "documents"))
     tok = docs.select(
         "doc_id", F.explode(T.tokens("text")).alias("token")
     )
@@ -1476,11 +1469,9 @@ FROM tot
     ),
 )
 def text_char_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.dedup import _ensure_parallelism
-
     docs = load_table(spark, sf_dir, "documents")
     chars = (
-        _ensure_parallelism(docs)
+        spread_for_compute(docs)
         .select(
             "doc_id",
             F.explode(
@@ -2049,10 +2040,8 @@ GROUP BY d.doc_id
 )
 def text_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
-    from ..operators.dedup import _ensure_parallelism
-
     d = (
-        _ensure_parallelism(docs)
+        spread_for_compute(docs)
         .select(
             "doc_id",
             F.explode(D.shingles(T.tokens("text"), 3)).alias("shingle"),
@@ -4125,10 +4114,8 @@ LIMIT {KN_TOP_K}
     ),
 )
 def text_kneser_ney(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.dedup import _ensure_parallelism
-
     docs = load_table(spark, sf_dir, "documents")
-    tok = _ensure_parallelism(docs).select(
+    tok = spread_for_compute(docs).select(
         "doc_id", T.tokens("text").alias("toks")
     )
     bigrams = F.transform(
@@ -4220,10 +4207,8 @@ ORDER BY c.r
     ),
 )
 def text_good_turing(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.dedup import _ensure_parallelism
-
     docs = load_table(spark, sf_dir, "documents")
-    tok = _ensure_parallelism(docs).select(
+    tok = spread_for_compute(docs).select(
         F.explode(T.tokens("text")).alias("t")
     )
     tok = tok.localCheckpoint(eager=False)  # uni + tot both read it

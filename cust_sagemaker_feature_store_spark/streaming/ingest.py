@@ -37,7 +37,9 @@ from ..core.feature_store import (
     INGEST_SEQ_COL,
     normalize_batch,
 )
-from ..core.online import DEFAULT_N_BUCKETS, upsert_bucketed_snapshot
+from ..core.online import (
+    DEFAULT_N_BUCKETS, read_snapshot, read_snapshot_meta, upsert_bucketed_snapshot
+)
 from ..functions.ids import with_dense_row_ids
 
 # ingest_seq = batch_id * BATCH_SEQ_STRIDE + dense row id. Dense ids
@@ -158,5 +160,6 @@ class StreamingIngest:
     def online_snapshot(self) -> DataFrame:
         """Serving view: tombstoned keys filtered out (the stored
         snapshot keeps them so they outrank late older records)."""
-        snap = self.spark.read.parquet(self.snapshot_dir)
+        meta = read_snapshot_meta(self.spark, self.snapshot_dir)
+        snap = read_snapshot(self.spark, self.snapshot_dir, meta)
         return snap.filter(~F.col(DELETED_COL)).select(*self.group.feature_names)

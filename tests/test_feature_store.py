@@ -59,7 +59,7 @@ def test_offline_is_append_only(store):
         [(1, "2022-01-01T00:00:00Z", 5.0, 0.1)],
         "customer_id long, event_time string, latest_purchase_value double, latest_loyalty_score double",
     )
-    store.ingest(GROUP.name, extra, base_seq=1_000_000)
+    store.ingest(GROUP.name, extra)
     assert store.offline_store(GROUP.name).count() == len(ROWS) + 1
 
 
@@ -80,7 +80,7 @@ def test_late_record_never_surfaces_online(store):
         [(3, "2022-01-01T00:00:00Z", 99.0, 0.0)],
         "customer_id long, event_time string, latest_purchase_value double, latest_loyalty_score double",
     )
-    store.ingest(GROUP.name, late, base_seq=2_000_000)
+    store.ingest(GROUP.name, late)
     row = [r for r in store.latest_view(GROUP.name).collect() if r["customer_id"] == 3]
     assert row[0]["latest_purchase_value"] == 40.0
 
@@ -104,7 +104,7 @@ def test_point_lookup_and_defaults(store):
 
 def test_delete_record_tombstone(store):
     # newest-event tombstone removes the key from the online view...
-    store.delete_record(GROUP.name, 1, "2022-07-01T00:00:00Z", base_seq=5_000_000)
+    store.delete_record(GROUP.name, 1, "2022-07-01T00:00:00Z")
     assert store.get_record(GROUP.name, 1) is None
     # ...but history keeps every record plus the tombstone (append-only)
     assert store.offline_store(GROUP.name).count() == len(ROWS) + 1
@@ -115,7 +115,7 @@ def test_delete_record_tombstone(store):
 def test_old_tombstone_does_not_delete(store):
     # a tombstone OLDER than the stored record loses the latest-wins
     # race — same late-data rule as any record
-    store.delete_record(GROUP.name, 1, "2022-02-01T00:00:00Z", base_seq=5_000_000)
+    store.delete_record(GROUP.name, 1, "2022-02-01T00:00:00Z")
     rec = store.get_record(GROUP.name, 1)
     assert rec is not None
     d = {f["FeatureName"]: f["ValueAsString"] for f in rec}
@@ -123,13 +123,13 @@ def test_old_tombstone_does_not_delete(store):
 
 
 def test_reingest_after_delete_resurrects(store):
-    store.delete_record(GROUP.name, 1, "2022-07-01T00:00:00Z", base_seq=5_000_000)
+    store.delete_record(GROUP.name, 1, "2022-07-01T00:00:00Z")
     assert store.get_record(GROUP.name, 1) is None
     fresh = store.spark.createDataFrame(
         [(1, "2022-08-01T00:00:00Z", 99.0, 1.0)],
         "customer_id long, event_time string, latest_purchase_value double, latest_loyalty_score double",
     )
-    store.ingest(GROUP.name, fresh, base_seq=6_000_000)
+    store.ingest(GROUP.name, fresh)
     d = {f["FeatureName"]: f["ValueAsString"] for f in store.get_record(GROUP.name, 1)}
     assert d["latest_purchase_value"] == "99.0"
 
@@ -239,7 +239,7 @@ def test_ingest_seq_dense_and_monotone_across_batches(spark, tmp_path):
         [(1, "2022-01-01T00:00:00Z", 999.0, 0.9)],
         "customer_id long, event_time string, latest_purchase_value double, latest_loyalty_score double",
     )
-    fs.ingest(GROUP.name, small)  # no base_seq: monotonicity is automatic
+    fs.ingest(GROUP.name, small)  # monotone across batches automatically
     seqs2 = sorted(
         r["ingest_seq"] for r in fs.offline_store(GROUP.name).select("ingest_seq").collect()
     )
@@ -251,8 +251,8 @@ def test_ingest_seq_dense_and_monotone_across_batches(spark, tmp_path):
 
 def test_cross_batch_equal_timestamp_tombstone(spark, tmp_path):
     # A tombstone with the SAME event time as the stored record, written
-    # in a later batch with no explicit base_seq, must win the tie by
-    # ingest order alone — the resurrect-on-replay hazard from ADVICE r1.
+    # in a later batch, must win the tie by ingest order alone — the
+    # resurrect-on-replay hazard from ADVICE r1.
     fs = FeatureStore(spark, str(tmp_path / "store"))
     fs.create_feature_group(GROUP)
     big = spark.createDataFrame(
@@ -357,7 +357,7 @@ def test_high_water_mark_counts_rows_that_lose_latest_wins(store, monkeypatch):
     seqs = {r["latest_purchase_value"]: r["ingest_seq"] for r in out.collect()}
     assert seqs[10.0] == max(seqs.values())
     store.upsert_online(GROUP.name, out)
-    assert store._snapshot_is_fresh(GROUP.name)
+    assert store._fresh_snapshot_meta(GROUP.name) is not None
 
     def no_fallback(name):
         raise AssertionError("lookup fell back to latest_view")
@@ -411,7 +411,7 @@ def test_upsert_keeps_an_older_64_bucket_layout(store, spark):
     store.upsert_online(GROUP.name, store.ingest(GROUP.name, batch))
     online = store.online_path(GROUP.name)
     assert read_snapshot_meta(spark, online)["n_buckets"] == 64
-    assert store._snapshot_is_fresh(GROUP.name)
+    assert store._fresh_snapshot_meta(GROUP.name) is not None
     got = store.batch_get_record(GROUP.name, [1, 2, 3, 9, 70, 133, 999])
     vals = {
         k: {f["FeatureName"]: f["ValueAsString"] for f in rec}["latest_purchase_value"]
@@ -432,22 +432,92 @@ def test_upsert_keeps_an_older_64_bucket_layout(store, spark):
 UPSERT_JOB_BUDGET = 7
 
 
-def test_upsert_online_job_budget(store, spark):
+def test_upsert_online_job_budget(store, spark, count_jobs):
     store.materialize_online(GROUP.name)
     batch = spark.createDataFrame(
         [(k, "2023-03-01T00:00:00Z", float(k), 0.5) for k in range(1, 40)], SCHEMA4
     )
     out = store.ingest(GROUP.name, batch)
-    sc = spark.sparkContext
-    sc.setJobGroup("upsert_job_budget", "upsert_online job budget")
-    try:
-        store.upsert_online(GROUP.name, out)
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setJobDescription(None)
-    jobs = sc.statusTracker().getJobIdsForGroup("upsert_job_budget")
-    assert 0 < len(jobs) <= UPSERT_JOB_BUDGET, len(jobs)
+    jobs = count_jobs(lambda: store.upsert_online(GROUP.name, out))
+    assert 0 < jobs <= UPSERT_JOB_BUDGET, jobs
     assert store.get_record(GROUP.name, 39) is not None
+
+
+def test_fresh_lookup_is_one_job_and_one_sidecar_read(store, count_jobs, monkeypatch):
+    # the sidecar is read once per lookup and carries the schema, so the
+    # scan needs no footer schema-inference job before it
+    from cust_sagemaker_feature_store_spark.core import feature_store, online
+
+    store.materialize_online(GROUP.name)
+    reads, read_meta = [], online.read_snapshot_meta
+
+    def counted(spark, snapshot_dir):
+        reads.append(snapshot_dir)
+        return read_meta(spark, snapshot_dir)
+
+    for mod in (online, feature_store):
+        monkeypatch.setattr(mod, "read_snapshot_meta", counted)
+    got = {}
+    lookups = {
+        "get_record": lambda: got.update(rec=store.get_record(GROUP.name, 2)),
+        "feature_vector": lambda: got.update(
+            vec=store.feature_vector(GROUP.name, 2, ["latest_purchase_value"])
+        ),
+    }
+    for name, lookup in lookups.items():
+        reads.clear()
+        assert count_jobs(lookup) == 1, name
+        assert len(reads) == 1, name
+    d = {f["FeatureName"]: f["ValueAsString"] for f in got["rec"]}
+    assert d["latest_purchase_value"] == "31.0"
+    assert got["vec"] == [31.0]
+
+
+def test_sidecar_without_schema_is_stale_until_rewritten(store, monkeypatch):
+    # a sidecar written before the schema was recorded serves through
+    # latest_view, and the next upsert_online rewrites it fresh
+    import json
+    import os as _os
+
+    store.materialize_online(GROUP.name)
+    meta_path = _os.path.join(store.online_path(GROUP.name), "_snapshot_meta.json")
+    with open(meta_path) as fh:
+        meta = json.load(fh)
+    with open(meta_path, "w") as fh:
+        json.dump({"n_buckets": meta["n_buckets"], "seq_high": meta["seq_high"]}, fh)
+    # the local Hadoop FS would reject the edit against its old checksum
+    _os.remove(_os.path.join(_os.path.dirname(meta_path), "._snapshot_meta.json.crc"))
+    assert store._fresh_snapshot_meta(GROUP.name) is None
+
+    fallbacks = []
+    latest_view = store.latest_view
+
+    def counted(name):
+        fallbacks.append(name)
+        return latest_view(name)
+
+    monkeypatch.setattr(store, "latest_view", counted)
+    d = {f["FeatureName"]: f["ValueAsString"] for f in store.get_record(GROUP.name, 1)}
+    assert d["latest_purchase_value"] == "20.0"
+    got = {
+        r["customer_id"]: r["latest_purchase_value"]
+        for r in store.online_store(GROUP.name).collect()
+    }
+    assert got == {1: 20.0, 2: 31.0, 3: 40.0}
+    assert len(fallbacks) == 2
+
+    batch = store.spark.createDataFrame([(9, "2023-03-01T00:00:00Z", 9.0, 0.9)], SCHEMA4)
+    store.upsert_online(GROUP.name, store.ingest(GROUP.name, batch))
+    assert "schema" in store._fresh_snapshot_meta(GROUP.name)
+    fallbacks.clear()
+    got = {
+        r["customer_id"]: r["latest_purchase_value"]
+        for r in store.online_store(GROUP.name).collect()
+    }
+    assert got == {1: 20.0, 2: 31.0, 3: 40.0, 9: 9.0}
+    d = {f["FeatureName"]: f["ValueAsString"] for f in store.get_record(GROUP.name, 9)}
+    assert d["latest_purchase_value"] == "9.0"
+    assert fallbacks == []
 
 
 def test_loose_timestamp_roundtrip(spark):
@@ -510,7 +580,7 @@ def test_vacuum_offline_preserves_latest_view(spark, tmp_path):
     fs.ingest(GROUP.name, spark.createDataFrame(ROWS, SCHEMA4))
     # key 2's latest becomes a tombstone (still pre-cutoff): it must
     # survive the vacuum or the deletion would silently un-delete
-    fs.delete_record(GROUP.name, 2, "2022-02-02T00:00:00Z", base_seq=10_000)
+    fs.delete_record(GROUP.name, 2, "2022-02-02T00:00:00Z")
 
     view_before = sorted(
         map(tuple, fs.latest_view(GROUP.name).collect())

@@ -634,6 +634,7 @@ def test_point_lookup_prunes_bucket_partitions(spark, tmp_path):
     )
     from cust_sagemaker_feature_store_spark.core.online import (
         read_snapshot_bucket,
+        read_snapshot_meta,
     )
     from cust_sagemaker_feature_store_spark.plans import partition_filters
 
@@ -658,7 +659,8 @@ def test_point_lookup_prunes_bucket_partitions(spark, tmp_path):
     fs.materialize_online("LookupPlan", n_buckets=16)
 
     snap_dir = fs.online_path("LookupPlan")
-    pruned = read_snapshot_bucket(spark, snap_dir, ["customer_id"], [7])
+    meta = read_snapshot_meta(spark, snap_dir)
+    pruned = read_snapshot_bucket(spark, snap_dir, ["customer_id"], [7], meta)
     pf = partition_filters(pruned)
     assert pf and "bucket" in pf[0].lower()
     assert [r["customer_id"] for r in pruned.filter("customer_id = 7").collect()] == [7]
@@ -685,7 +687,9 @@ def test_point_lookup_prunes_bucket_partitions(spark, tmp_path):
     full = spark.read.parquet(int_dir)
     assert dict(full.dtypes)["k"] == "int"
     wanted = [3, 7, 29, 404]
-    pruned = read_snapshot_bucket(spark, int_dir, "k", wanted)
+    pruned = read_snapshot_bucket(
+        spark, int_dir, "k", wanted, read_snapshot_meta(spark, int_dir)
+    )
     pf3 = partition_filters(pruned)
     assert pf3 and "bucket" in pf3[0].lower()
     got = sorted(map(tuple, pruned.filter(F.col("k").isin(wanted)).collect()))

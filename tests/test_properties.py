@@ -314,7 +314,7 @@ def test_dense_row_ids_nondeterministic_source(spark):
     # is deliberately nothing for the caller to unpersist here
 
 
-def test_dense_row_ids_add_no_jobs_to_actions(spark):
+def test_dense_row_ids_add_no_jobs_to_actions(spark, count_jobs):
     """An action on the id-tagged frame runs no more Spark jobs than the
     same action on its persisted input: the per-partition offsets are a
     literal map, not a joined table whose broadcast re-runs with every
@@ -325,22 +325,12 @@ def test_dense_row_ids_add_no_jobs_to_actions(spark):
         with_dense_row_ids,
     )
 
-    sc = spark.sparkContext
     df = spark.range(20_000).repartition(4).persist()
     try:
         df.count()
         out, _ = with_dense_row_ids(df, "did")
-
-        def jobs(frame, group):
-            sc.setJobGroup(group, group)
-            try:
-                frame.agg(F.max(frame.columns[-1])).collect()
-            finally:
-                sc.setLocalProperty("spark.jobGroup.id", None)
-                sc.setJobDescription(None)
-            return len(sc.statusTracker().getJobIdsForGroup(group))
-
-        assert jobs(out, "dense_ids_out") <= jobs(df, "dense_ids_in")
+        out_jobs = count_jobs(lambda: out.agg(F.max("did")).collect())
+        assert out_jobs <= count_jobs(lambda: df.agg(F.max("id")).collect())
     finally:
         df.unpersist()
 
